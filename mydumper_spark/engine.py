@@ -20,7 +20,21 @@ from mydumper_spark.catalog import ParquetCatalog, TableFilters, TableMeta, pick
 from mydumper_spark.operators.transform import TableTransform, apply_transform
 from mydumper_spark.planner.chunks import ChunkPlan, plan_chunks
 from mydumper_spark.plans.loader_dag import LoaderDag, LoadJob, Phase, PurgeMode
-from mydumper_spark.sinks.manifest import Manifest, verify_manifest, write_manifest
+from mydumper_spark.sinks.manifest import (
+    Manifest,
+    chunk_prefix,
+    is_sql_chunk,
+    manifest_algorithm,
+    materialized_table,
+    read_dumped_table,
+    read_manifest,
+    read_table_by_name,
+    sidecar_path,
+    sql_chunk_paths,
+    verify_manifest,
+    write_manifest,
+    write_sidecar,
+)
 from mydumper_spark.sinks.writers import (
     CsvFormat,
     write_csv,
@@ -383,26 +397,6 @@ def _open_source(spark: SparkSession, source: str, cfg: DumpConfig):
     )
     mysql_like = dialect.is_mysql_like and dialect.product is not ServerProduct.UNKNOWN
     return JdbcCatalog(spark, source, props, mysql_like=mysql_like), snapshot, dialect
-
-
-def _read_written(spark: SparkSession, path: str, cfg: DumpConfig, schema):
-    """Typed read-back of a just-written table (checksum/profile input) —
-    dispatching on the dump format, with the dumped schema (never
-    inference: JSON/CSV are stringly-typed on disk)."""
-    if cfg.fmt == "sql":
-        from mydumper_spark.sinks.manifest import sql_chunk_paths
-        from mydumper_spark.sources.insert_parser import read_insert_sql
-
-        return read_insert_sql(spark, sql_chunk_paths(path), schema)
-    if cfg.fmt == "jsonl":
-        return spark.read.schema(schema).json(path)
-    if cfg.fmt == "orc":
-        return spark.read.orc(path)
-    if cfg.fmt == "csv":
-        from mydumper_spark.sinks.writers import read_csv_typed
-
-        return read_csv_typed(spark, path, schema, cfg.csv_format)
-    return spark.read.parquet(path)
 
 
 def _attach_schema_artifact(entry, artifact, out_name: str,
@@ -818,22 +812,10 @@ def dump(spark: SparkSession, source_dir: str, cfg: DumpConfig) -> Manifest:
             if cfg.fmt == "csv":
                 path = os.path.join(cfg.output_dir, f"{out_name}.dat")
                 write_csv(out, path, cfg.csv_format, cfg.max_records_per_file)
-                # schema sidecar: csv is stringly-typed on disk, so L9
-                # verification and a typed restore need the dumped schema
-                # (the dialect itself rides in the manifest config section)
-                with open(os.path.join(cfg.output_dir,
-                                       f"{out_name}.schema.json"), "w") as f:
-                    f.write(out.schema.json())
             elif cfg.fmt == "jsonl":
                 path = os.path.join(cfg.output_dir, f"{out_name}.jsonl")
                 write_jsonl(out, path, cfg.max_records_per_file,
                             cfg.csv_format.compression)
-                # schema sidecar (the reference dumps schema files too):
-                # JSON is stringly-typed, so a typed restore/verify needs
-                # the dumped schema, not inference
-                with open(os.path.join(cfg.output_dir,
-                                       f"{out_name}.schema.json"), "w") as f:
-                    f.write(out.schema.json())
             elif cfg.fmt == "orc":
                 from mydumper_spark.sinks.writers import write_orc
 
@@ -901,23 +883,28 @@ def dump(spark: SparkSession, source_dir: str, cfg: DumpConfig) -> Manifest:
                     open(chunks[0], "w").close()
                 path = chunks[0]  # manifest records chunk 0; readers
                 # discover siblings via sql_chunk_paths
-                with open(os.path.join(cfg.output_dir,
-                                       f"{out_name}.schema.json"), "w") as f:
-                    f.write(out.schema.json())
             else:
                 write_parquet(out, path, cfg.max_records_per_file)
+            sidecar_prefix = os.path.join(cfg.output_dir, out_name)
+            if cfg.fmt in ("csv", "jsonl", "sql"):
+                # stringly-typed on disk: L9 verification and a typed
+                # restore need the dumped schema, not inference (a csv
+                # dialect rides in the manifest config section)
+                write_sidecar(sidecar_prefix, out.schema)
             if cfg.exec_per_file:
-                if cfg.fmt == "sql":
-                    from mydumper_spark.sinks.manifest import sql_chunk_paths
-
-                    for p in sql_chunk_paths(path):  # reference: per FILE
-                        exec_per_file(p, cfg.exec_per_file)
-                else:
-                    exec_per_file(path, cfg.exec_per_file)
+                # reference: per FILE — every sql chunk, or the part
+                # files of a directory-format table
+                for p in (sql_chunk_paths(path) if cfg.fmt == "sql"
+                          else [path]):
+                    exec_per_file(p, cfg.exec_per_file)
             # read-back of the written bytes: what checksums and profiles
             # must describe (the files, not the pre-write plan). Runs for
             # EITHER flag — profile without checksum is a valid dump.
-            written = _read_written(spark, path, cfg, out.schema)
+            written = read_dumped_table(spark, {"path": path},
+                                        csv_dialect=manifest.csv_dialect)
+            if written is None:
+                raise RuntimeError(
+                    f"dump of {key}: {path!r} cannot be read back")
             entry = build_entry(written, key, manifest.algorithm, path=path,
                                 database=db_rec, checksum=cfg.checksum)
             if pre_rows is not None and entry.rows != pre_rows:
@@ -935,7 +922,6 @@ def dump(spark: SparkSession, source_dir: str, cfg: DumpConfig) -> Manifest:
                 # chunk through the filter on a worker pool (the reference
                 # filters per writer thread), record chunk0's filtered name
                 from mydumper_spark.sinks.exec_sink import exec_filter_files
-                from mydumper_spark.sinks.manifest import sql_chunk_paths
 
                 filtered = exec_filter_files(
                     sql_chunk_paths(path), cfg.exec_per_thread,
@@ -948,8 +934,6 @@ def dump(spark: SparkSession, source_dir: str, cfg: DumpConfig) -> Manifest:
                 # plus the typed-read sidecar where the format has one
                 files = []
                 if cfg.fmt == "sql":
-                    from mydumper_spark.sinks.manifest import sql_chunk_paths
-
                     files = sql_chunk_paths(path)  # every sibling chunk
                 elif os.path.isdir(path):
                     files = sorted(
@@ -957,8 +941,7 @@ def dump(spark: SparkSession, source_dir: str, cfg: DumpConfig) -> Manifest:
                         for dp, _, fs in os.walk(path) for f in fs)
                 elif os.path.exists(path):
                     files = [path]
-                sidecar = os.path.join(cfg.output_dir,
-                                       f"{out_name}.schema.json")
+                sidecar = sidecar_path(sidecar_prefix)
                 if os.path.exists(sidecar):
                     files.append(sidecar)
                 cfg.table_done(key, files)
@@ -1071,8 +1054,7 @@ def import_mysqldump(spark: SparkSession, dumpfile: str, out_dir: str,
             # on the same route as populated tables
             t["data_path"] = os.path.join(out_dir, f"{key}.00000.sql")
             open(t["data_path"], "w").close()
-        with open(os.path.join(out_dir, f"{key}.schema.json"), "w") as f:
-            f.write(df.schema.json())
+        write_sidecar(os.path.join(out_dir, key), df.schema)
         entry = build_entry(df, key, manifest.algorithm,
                             path=t["data_path"], database=t["database"],
                             checksum=checksum)
@@ -1461,10 +1443,8 @@ def import_mydumper_dir(spark: SparkSession, src_dir: str, out_dir: str,
         else:
             df = spark.createDataFrame([], item["schema"])
         # sidecar named after the chunk prefix (db.table), the name
-        # every chunk-path schema lookup derives (_sidecar_schema)
-        with open(os.path.join(out, f"{item['qual']}.schema.json"),
-                  "w") as f:
-            f.write(df.schema.json())
+        # every chunk-path schema lookup derives (read_sidecar)
+        write_sidecar(os.path.join(out, item["qual"]), df.schema)
         return build_entry(df, item["key"], manifest.algorithm,
                            path=item["chunk0"],
                            database=item["db"] if multi_db else None,
@@ -1566,8 +1546,6 @@ def restore(
     (/root/reference/src/myloader/myloader_restore.c, myloader.c:684-730).
     """
     from mydumper_spark.sinks.exec_sink import FilenameRegistry
-    from mydumper_spark.sinks.manifest import read_manifest
-    from mydumper_spark.sources.dump_reader import read_dump_table
 
     jdbc_target = target_root.startswith("jdbc:")
     if target_database is not None and not jdbc_target:
@@ -1762,127 +1740,58 @@ def restore(
         def read_target(t: str) -> DataFrame:
             return spark.read.parquet(target_paths[t])
 
-    def source_df(table: str, src_path: str | None) -> DataFrame:
-        # incremental entries hold a DELTA; restores materialize the full
-        # state through the parent-manifest chain (K10/P10)
-        if doc["tables"][table].get("incremental"):
-            from mydumper_spark.sinks.manifest import materialized_table
-
-            return materialized_table(spark, dump_root, table)
-        # manifest path wins: weird/masqueraded names don't match the
-        # table-name-derived default (FilenameRegistry mapping)
-        if src_path and src_path.endswith(".parquet") and os.path.exists(src_path):
-            return spark.read.parquet(src_path)
-        if src_path and src_path.endswith(".orc") and os.path.exists(src_path):
-            return spark.read.orc(src_path)
-        if src_path and src_path.endswith(".jsonl") and os.path.exists(src_path):
-            from pyspark.sql import types as T
-
-            sidecar = src_path[: -len(".jsonl")] + ".schema.json"
-            with open(sidecar) as f:  # typed read via the dumped schema
-                schema = T.StructType.fromJson(__import__("json").load(f))
-            return spark.read.schema(schema).json(src_path)
-        if src_path and os.path.exists(src_path):
-            from mydumper_spark.sinks.manifest import (
-                is_sql_chunk,
-                read_dumped_table,
-            )
-
-            if is_sql_chunk(src_path):
-                filt_ext = doc.get("config", {}).get(
-                    "exec_per_thread_extension")
-                if filt_ext and src_path.endswith(filt_ext):
-                    # dump was written through --exec-per-thread: pipe
-                    # every chunk back through the user's decode command
-                    # (myloader --exec-per-thread) into a scratch dir —
-                    # the dump dir itself stays untouched. Decoded ONCE
-                    # per table (_ept_scratch), removed at process exit.
-                    if exec_per_thread is None:
-                        raise ValueError(
-                            "dump chunks carry the --exec-per-thread "
-                            f"extension {filt_ext!r}; pass "
-                            "exec_per_thread=<decode command> (e.g. "
-                            "'lz4 -dc') to read them back")
-                    if table in _ept_scratch:
-                        entry2 = dict(doc["tables"][table])
-                        entry2["path"] = _ept_scratch[table]
-                        df = read_dumped_table(spark, entry2)
-                        if df is not None:
-                            return df
-                    import atexit
-                    import shutil as _shutil
-                    import tempfile
-
-                    from mydumper_spark.sinks.exec_sink import (
-                        exec_decode_files,
-                    )
-                    from mydumper_spark.sinks.manifest import (
-                        _SQL_CHUNK_RE,
-                        sql_chunk_paths,
-                    )
-
-                    scratch = tempfile.mkdtemp(prefix="mydumper_ept_")
-                    atexit.register(_shutil.rmtree, scratch,
-                                    ignore_errors=True)
-                    # pooled decode, the dump side's exec_filter_files
-                    # inverse: chunks overlap instead of serializing on
-                    # the driver; decoded[0] stays the manifest path
-                    decoded = exec_decode_files(
-                        sql_chunk_paths(src_path), exec_per_thread,
-                        filt_ext, scratch)
-                    prefix = _SQL_CHUNK_RE.sub(
-                        "", os.path.basename(src_path))
-                    side = os.path.join(os.path.dirname(src_path),
-                                        f"{prefix}.schema.json")
-                    if os.path.exists(side):
-                        _shutil.copy(side, scratch)
-                    _ept_scratch[table] = decoded[0]
-                    entry2 = dict(doc["tables"][table])
-                    entry2["path"] = decoded[0]
-                    df = read_dumped_table(spark, entry2)
-                    if df is not None:
-                        return df
-                # fmt="sql" dump (plain or -c compressed): typed read via
-                # the .schema.json sidecar + the INSERT parser (manifest
-                # path wins over name derivation — masqueraded filenames)
-                df = read_dumped_table(spark, doc["tables"][table])
-                if df is not None:
-                    return df
-        if src_path and src_path.endswith(".dat") and os.path.exists(src_path):
-            from mydumper_spark.sinks.manifest import read_dumped_table
-
-            # typed csv read: schema sidecar + the dialect the manifest
-            # recorded at dump time (falls through for pre-sidecar dumps)
-            df = read_dumped_table(
-                spark, doc["tables"][table],
-                csv_dialect=doc.get("config", {}).get("csv_dialect"))
-            if df is not None:
-                return df
-        # name-derived fallback (stale absolute path / missing sidecar):
-        # on-disk chunks of an imported hostile-name table keep their
-        # mydumper_N placeholder while the manifest key is the REAL
-        # name — derive the filename prefix from the recorded chunk
-        # path (the path STRING survives a moved dump dir) before
-        # falling back to the manifest key
-        src = doc["tables"][table].get("path") or ""
-        from mydumper_spark.sinks.manifest import (
-            _DAT_CHUNK_RE,
-            _SQL_CHUNK_RE,
-        )
-
-        m = _SQL_CHUNK_RE.search(src) or _DAT_CHUNK_RE.search(src)
-        if m:
-            prefix = os.path.basename(src)[: -len(m.group(0))]
-            if prefix and prefix != table:
-                return read_dump_table(spark, dump_root, prefix)
-        return read_dump_table(spark, dump_root, table)
-
     # --exec-per-thread decode cache: source_df is called up to three
     # times per table (schema phase, data phase, index-phase column
     # check) — decode ONCE per table, reuse the scratch dir; the decoded
     # files must outlive this call (Spark reads them lazily during the
     # DATA/verify jobs), so cleanup registers at process exit
     _ept_scratch: dict[str, str] = {}
+    filt_ext = doc.get("config", {}).get("exec_per_thread_extension")
+
+    def ept_decoded(table: str, src_path: str) -> str:
+        # dump was written through --exec-per-thread: pipe every chunk
+        # back through the user's decode command (myloader
+        # --exec-per-thread) into a scratch dir — the dump dir itself
+        # stays untouched. Returns the decoded chunk 0, whose siblings
+        # and sidecar sit next to it.
+        if exec_per_thread is None:
+            raise ValueError(
+                "dump chunks carry the --exec-per-thread extension "
+                f"{filt_ext!r}; pass exec_per_thread=<decode command> "
+                "(e.g. 'lz4 -dc') to read them back")
+        if table not in _ept_scratch:
+            import atexit
+            import shutil as _shutil
+            import tempfile
+
+            from mydumper_spark.sinks.exec_sink import exec_decode_files
+
+            scratch = tempfile.mkdtemp(prefix="mydumper_ept_")
+            atexit.register(_shutil.rmtree, scratch, ignore_errors=True)
+            # pooled decode, the dump side's exec_filter_files inverse:
+            # chunks overlap instead of serializing on the driver
+            decoded = exec_decode_files(
+                sql_chunk_paths(src_path), exec_per_thread, filt_ext,
+                scratch)
+            side = sidecar_path(chunk_prefix(src_path))
+            if os.path.exists(side):
+                _shutil.copy(side, scratch)
+            _ept_scratch[table] = decoded[0]
+        return _ept_scratch[table]
+
+    def source_df(table: str, src_path: str | None) -> DataFrame:
+        # the manifest path wins over the table name (weird/masqueraded
+        # names don't match the name-derived default); incremental
+        # entries materialize the full state through the parent chain
+        if (src_path and filt_ext and src_path.endswith(filt_ext)
+                and is_sql_chunk(src_path) and os.path.exists(src_path)):
+            df = read_dumped_table(
+                spark, {"path": ept_decoded(table, src_path)})
+        else:
+            df = materialized_table(spark, dump_root, table, doc)
+        if df is not None:
+            return df
+        return read_table_by_name(spark, dump_root, table, doc)
 
     skipped_ddl: dict[str, list[str]] = {}
     for t, entry in doc["tables"].items():
@@ -2206,7 +2115,6 @@ def restore(
         # L9: recompute checksums on the *target* and compare to the
         # manifest, with the algorithm the dump recorded
         from mydumper_spark.functions.checksum import table_checksum
-        from mydumper_spark.sinks.manifest import manifest_algorithm
 
         algo = manifest_algorithm(doc)
         checks = {}
@@ -2322,11 +2230,7 @@ def dump_incremental(
     from mydumper_spark.catalog import JdbcCatalog
     from mydumper_spark.operators.diff import snapshot_diff
     from mydumper_spark.sinks.exec_sink import FilenameRegistry
-    from mydumper_spark.sinks.manifest import (
-        build_entry,
-        materialized_table,
-        read_manifest,
-    )
+    from mydumper_spark.sinks.manifest import build_entry
 
     if cfg.fmt != "parquet":
         raise ValueError("incremental dumps support fmt='parquet' only")
@@ -2522,8 +2426,6 @@ def _materialize_from_parts(spark, parent_dir, table, delta_path, del_path, pk):
     """Parent state ⊎ freshly WRITTEN delta/deletes — what a restore of
     this incremental dump will reconstruct (read back from disk, so the
     manifest checksum covers the written bytes)."""
-    from mydumper_spark.sinks.manifest import materialized_table
-
     base = materialized_table(spark, parent_dir, table)
     delta = spark.read.parquet(delta_path)
     gone = spark.read.parquet(del_path).select(*pk)
@@ -2553,7 +2455,6 @@ def source_drift(spark: SparkSession, dump_root: str, source: str,
     dumped without checksums."""
     from mydumper_spark.catalog import JdbcCatalog
     from mydumper_spark.functions.checksum import table_checksum
-    from mydumper_spark.sinks.manifest import manifest_algorithm, read_manifest
 
     cfg = cfg or DumpConfig(output_dir=dump_root)
     doc = read_manifest(dump_root)

@@ -1,7 +1,6 @@
 from mydumper_spark.sinks.writers import (  # noqa: F401
     CsvFormat,
     write_csv,
-    write_insert_sql,
     write_load_data,
     write_parquet,
 )

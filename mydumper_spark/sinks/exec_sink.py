@@ -24,12 +24,13 @@ from concurrent.futures import ThreadPoolExecutor
 
 def exec_per_file(root: str, command: str, max_workers: int = 4,
                   pattern: str = "part-") -> list[tuple[str, int]]:
-    """Run ``command`` once per data file under root. ``FILENAME`` in the
+    """Run ``command`` once per data file under root — or once on root
+    itself when it is a file (a fmt="sql" chunk). ``FILENAME`` in the
     command is substituted (reference semantics: appended if absent).
     Returns [(path, returncode)]."""
     # Strictly data files only: the reference runs --exec on completed data
     # files, never on metadata/manifest siblings (mydumper_exec_command.c).
-    files = sorted(
+    files = [root] if os.path.isfile(root) else sorted(
         os.path.join(dp, f)
         for dp, _, fs in os.walk(root)
         for f in fs

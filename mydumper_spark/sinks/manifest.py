@@ -296,12 +296,16 @@ def manifest_algorithm(doc: dict) -> str:
 def read_dumped_table(spark, entry: dict,
                       csv_dialect: dict | None = None) -> "DataFrame | None":
     """Typed read of one manifest entry's dumped data, dispatching on the
-    recorded path's format: parquet directly; jsonl and csv through their
-    ``.schema.json`` sidecar (both are stringly-typed on disk — inference
-    would not round-trip the dumped types), csv additionally through the
-    dialect the manifest recorded at dump time (``csv_dialect``). Returns
-    None only for dumps that genuinely lack the sidecar (written before it
-    existed) — callers report "unverifiable", they don't crash."""
+    recorded path's format: parquet and orc directly; sql, jsonl and csv
+    through their ``.schema.json`` sidecar (stringly-typed on disk —
+    inference would not round-trip the dumped types), csv additionally
+    through the dialect the manifest recorded at dump time
+    (``csv_dialect``). The one answer to "how is a dumped table read
+    back": dump's checksum read-back, verify and restore all come here,
+    so the checksum each recomputes covers the same rows. Returns None
+    for a missing path, an --exec-per-thread filtered chunk, or a dump
+    that predates the sidecar — callers report "unverifiable", they
+    don't crash."""
     path = entry.get("path")
     if not path or not os.path.exists(path):
         return None
@@ -316,7 +320,7 @@ def read_dumped_table(spark, entry: dict,
             # --exec-per-thread filtered dump: unreadable without the
             # user's decode command — unverifiable, never garbage-parsed
             return None
-        schema = _sidecar_schema(path, tail)
+        schema = read_sidecar(path[: -len(tail)])
         if schema is None:
             return None
         from mydumper_spark.sources.insert_parser import read_insert_sql
@@ -325,7 +329,7 @@ def read_dumped_table(spark, entry: dict,
     if path.endswith(".orc"):
         return spark.read.orc(path)
     if path.endswith(".jsonl"):
-        schema = _sidecar_schema(path, ".jsonl")
+        schema = read_sidecar(path[: -len(".jsonl")])
         if schema is None:
             return None
         return spark.read.schema(schema).json(path)
@@ -339,7 +343,7 @@ def read_dumped_table(spark, entry: dict,
         tail = m.group(0)
         if tail[tail.index(".dat") + len(".dat"):] not in _NATIVE_SQL_EXTS:
             return None
-        schema = _sidecar_schema(path, tail)
+        schema = read_sidecar(path[: -len(tail)])
         if schema is None:
             return None
         from mydumper_spark.sinks.writers import read_csv_typed
@@ -347,7 +351,7 @@ def read_dumped_table(spark, entry: dict,
         return read_csv_typed(spark, dat_chunk_paths(path), schema,
                               _dialect_format(csv_dialect))
     if path.endswith(".dat"):
-        schema = _sidecar_schema(path, ".dat")
+        schema = read_sidecar(path[: -len(".dat")])
         if schema is None:
             return None
         from mydumper_spark.sinks.writers import read_csv_typed
@@ -377,6 +381,13 @@ _DAT_CHUNK_RE = re.compile(r"\.\d{5}\.dat(\.[A-Za-z0-9]{1,10})*$")
 #: anything else means the dump went through --exec-per-thread and needs
 #: the user's decode command (engine.restore exec_per_thread=…)
 _NATIVE_SQL_EXTS = {"", ".gz", ".zst"}
+
+
+def chunk_prefix(path: str) -> str | None:
+    """``dir/t`` of a chunk file ``dir/t.NNNNN.sql[.ext…]`` or
+    ``dir/t.NNNNN.dat[.ext…]``; None for any other path."""
+    m = _SQL_CHUNK_RE.search(path) or _DAT_CHUNK_RE.search(path)
+    return path[: m.start()] if m else None
 
 
 def is_sql_chunk(path: str) -> bool:
@@ -410,29 +421,49 @@ def dat_chunk_paths(chunk0: str) -> list[str]:
     return _chunk_paths(chunk0, _DAT_CHUNK_RE, ".dat")
 
 
-def _sidecar_schema(path: str, suffix: str):
-    """The dumped StructType from a ``.schema.json`` sidecar, or None when
-    the dump predates sidecars for this format."""
+def sidecar_path(prefix: str) -> str:
+    """``{prefix}.schema.json`` — the dumped StructType of the table whose
+    data files are named ``{prefix}.*`` (``t.dat``, ``t.jsonl``,
+    ``t.00000.sql``…). csv, jsonl and sql are stringly-typed on disk, so
+    every typed re-read of them goes through this sidecar."""
+    return prefix + ".schema.json"
+
+
+def write_sidecar(prefix: str, schema) -> None:
+    """Record ``schema`` (a StructType) as ``prefix``'s sidecar."""
+    with open(sidecar_path(prefix), "w") as f:
+        f.write(schema.json())
+
+
+def read_sidecar(prefix: str):
+    """The dumped StructType from ``prefix``'s sidecar, or None when the
+    dump predates sidecars for this format."""
     from pyspark.sql import types as T
 
-    sidecar = path[: -len(suffix)] + ".schema.json"
+    sidecar = sidecar_path(prefix)
     if not os.path.exists(sidecar):
         return None
     with open(sidecar) as f:
         return T.StructType.fromJson(json.load(f))
 
 
-def materialized_table(spark, dump_root: str, table: str):
-    """Reconstruct one table's FULL current state from a dump that may be
-    incremental: walk the parent-manifest chain to the base full dump, then
-    replay each generation's delta (drop deleted/changed keys, union the
-    delta rows) — ``apply_diff`` semantics over the dumped artifacts.
-    Cost is proportional to chain length × change volume, the whole point
-    of incremental dumps (the reference daemon's snapshot ring K10 keeps
-    full dumps; we keep one full + deltas)."""
+def materialized_table(spark, dump_root: str, table: str,
+                       doc: dict | None = None) -> "DataFrame | None":
+    """Typed read of one manifest table's FULL current state — the one
+    read verify and restore share. A plain entry reads its recorded path
+    through :func:`read_dumped_table` with the dialect this manifest
+    recorded (None: the format cannot be re-read). An incremental entry
+    walks the parent-manifest chain to the base full dump, then replays
+    each generation's delta (drop deleted/changed keys, union the delta
+    rows) — ``apply_diff`` semantics over the dumped artifacts. Cost is
+    proportional to chain length × change volume, the whole point of
+    incremental dumps (the reference daemon's snapshot ring K10 keeps
+    full dumps; we keep one full + deltas). ``doc`` is ``dump_root``'s
+    manifest when the caller already holds it."""
     from pyspark.sql import functions as F
 
-    doc = read_manifest(dump_root)
+    if doc is None:
+        doc = read_manifest(dump_root)
     entry = doc["tables"][table]
     inc = entry.get("incremental")
     if not inc:
@@ -455,6 +486,23 @@ def materialized_table(spark, dump_root: str, table: str):
     return kept.unionByName(delta)
 
 
+def read_table_by_name(spark, dump_root: str, table: str, doc: dict):
+    """Restore's fallback when the recorded path cannot be re-read (a
+    moved dump dir's stale absolute path, a missing sidecar): find the
+    table's files in ``dump_root`` by name. On-disk chunks of an imported
+    hostile-name table keep their mydumper_N placeholder while the
+    manifest key is the REAL name, so the filename prefix comes from the
+    recorded chunk path (the path STRING survives a moved dump dir)
+    before the manifest key. Raises when nothing matches."""
+    from mydumper_spark.sources.dump_reader import read_dump_table
+
+    path = doc["tables"][table].get("path") or ""
+    prefix = os.path.basename(chunk_prefix(path) or "")
+    if prefix and prefix != table:
+        return read_dump_table(spark, dump_root, prefix)
+    return read_dump_table(spark, dump_root, table)
+
+
 def verify_manifest(spark, root: str) -> dict[str, dict]:
     """L9 checksum verification: recompute every table's checksum from its
     dumped files and compare (/root/reference/src/checksum.c:202-302),
@@ -466,7 +514,6 @@ def verify_manifest(spark, root: str) -> dict[str, dict]:
     Returns {table: {"ok": bool|None, "expected": ..., "actual": ...}}."""
     doc = read_manifest(root)
     algo = manifest_algorithm(doc)
-    csv_dialect = doc.get("config", {}).get("csv_dialect")
     results = {}
     for t, entry in doc["tables"].items():
         if not entry.get("path"):
@@ -476,11 +523,8 @@ def verify_manifest(spark, root: str) -> dict[str, dict]:
             results[t] = {"ok": None,
                           "reason": "dump ran without checksums"}
             continue
-        if entry.get("incremental"):
-            # delta entry: checksums cover the reconstructed full state
-            df = materialized_table(spark, root, t)
-        else:
-            df = read_dumped_table(spark, entry, csv_dialect=csv_dialect)
+        # a delta entry's checksums cover the reconstructed full state
+        df = materialized_table(spark, root, t, doc)
         if df is None:
             results[t] = {
                 "ok": None,

@@ -523,44 +523,6 @@ def _sql_literal(col, dtype: str):
     return F.when(c.isNull(), F.lit("NULL")).otherwise(quoted)
 
 
-def insert_statements(
-    df: DataFrame,
-    table: str,
-    rows_per_statement: int = 1000,
-    complete_insert: bool = False,
-    insert_mode: str = "INSERT",  # INSERT | INSERT IGNORE | REPLACE (K1)
-) -> DataFrame:
-    """K1: render rows into multi-row INSERT statements.
-
-    The reference caps statements by *bytes* (--statement-size); rows-per-
-    statement is the deterministic, distributed-friendly equivalent (also
-    what myloader's --rows re-batching converges to, L4). Grouping is
-    per-partition-contiguous via a row bucket — no global shuffle of values,
-    only the final statement assembly groups within each bucket."""
-    value_cols = [_sql_literal(c, t) for c, t in df.dtypes]
-    tuple_col = F.concat(F.lit("("), F.concat_ws(",", *value_cols), F.lit(")"))
-    cols_clause = "(" + ",".join(f"`{c}`" for c in df.columns) + ")" if complete_insert else ""
-    bucketed = df.select(
-        tuple_col.alias("vals"),
-        F.floor(F.monotonically_increasing_id() / rows_per_statement).alias("bucket"),
-    )
-    stmts = bucketed.groupBy("bucket").agg(
-        F.concat(
-            F.lit(f"{insert_mode} INTO `{table}` {cols_clause} VALUES ".replace("  ", " ")),
-            F.concat_ws(",", F.collect_list("vals")),
-            F.lit(";"),
-        ).alias("statement")
-    )
-    return stmts.select("statement")
-
-
-def write_insert_sql(
-    df: DataFrame, path: str, table: str, rows_per_statement: int = 1000, **kw
-) -> None:
-    """K1 sink: one .sql-lines file tree of INSERT statements."""
-    insert_statements(df, table, rows_per_statement, **kw).write.mode("overwrite").text(path)
-
-
 def insert_statements_stream(
     df: DataFrame,
     table: str,
@@ -569,16 +531,17 @@ def insert_statements_stream(
     insert_mode: str = "INSERT",
     statement_size: int | None = None,
 ) -> DataFrame:
-    """K1, dump-path variant: assemble multi-row INSERT statements with NO
-    shuffle and preserved partition order.
+    """K1: render rows into multi-row INSERT statements with NO shuffle
+    and preserved partition order.
 
-    ``insert_statements`` groups tuples via ``groupBy(bucket)`` — an
-    exchange of every rendered byte, and ``collect_list`` forfeits row
-    order, which breaks ``-k/--order-by-primary`` (the reference sorts
-    rows *within* each file, mydumper_write.c:1055). Here the tuples are
-    rendered JVM-side (same ``_sql_literal`` matrix) and only the cheap
-    string *concatenation* runs in Arrow-batched ``mapInPandas``, carrying
-    state across batches within a partition: zero exchange, order intact.
+    A ``groupBy``-per-statement assembly would exchange every rendered
+    byte, and its ``collect_list`` forfeits row order, which breaks
+    ``-k/--order-by-primary`` (the reference sorts rows *within* each
+    file, mydumper_write.c:1055). Here the tuples are rendered JVM-side
+    (the ``_sql_literal`` matrix) and only the cheap string
+    *concatenation* runs in Arrow-batched ``mapInPandas``, carrying state
+    across batches within a partition: zero exchange, order intact.
+    Identifiers are backtick-quoted with embedded backticks doubled.
 
     ``statement_size`` caps statements by BYTES — the reference's exact
     ``-s/--statement-size`` semantics (mydumper_write.c checks the byte

@@ -14,6 +14,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mydumper_spark.sinks.manifest import read_sidecar
 from mydumper_spark.sinks.writers import CsvFormat
 
 #: filename → file-type routing, after myloader.h:142-157
@@ -88,14 +89,7 @@ def read_dump_table(
         if schema is None:
             # engine dumps write a schema sidecar next to the .dat — a
             # typed read beats inference (csv is stringly-typed on disk)
-            sidecar = os.path.join(root, f"{table}.schema.json")
-            if os.path.exists(sidecar):
-                import json
-
-                from pyspark.sql import types as T
-
-                with open(sidecar) as f:
-                    schema = T.StructType.fromJson(json.load(f))
+            schema = read_sidecar(os.path.join(root, table))
         from mydumper_spark.sinks.writers import read_csv_typed
 
         return read_csv_typed(spark, dat, schema, fmt)
@@ -109,12 +103,10 @@ def read_dump_table(
         from mydumper_spark.sinks.writers import read_csv_typed
 
         return read_csv_typed(spark, dat_chunks, schema, fmt)
-    # .sql INSERT dump: either our write_insert_sql dir ({table}.sql/) or
-    # reference-style per-chunk files (db.table.NNNN.sql) in the root
-    sql_dir = os.path.join(root, f"{table}.sql")
+    # .sql INSERT dump: reference-style per-chunk files
+    # (db.table.NNNN.sql) in the root
     chunked = _reference_chunks(root, table, "data_sql")
-    target = sql_dir if os.path.isdir(sql_dir) else chunked
-    if not target:
+    if not chunked:
         raise FileNotFoundError(f"no parquet/.dat/.sql data for table {table!r} in {root}")
     if schema is None:
         schema = _schema_from_sidecar(root, table)
@@ -123,7 +115,7 @@ def read_dump_table(
             f".sql INSERT dump for {table!r} needs a schema — none given and "
             f"no sibling *-schema.sql file found in {root}"
         )
-    return read_insert_sql(spark, target, schema)
+    return read_insert_sql(spark, chunked, schema)
 
 
 def _reference_chunks(root: str, table: str, kind: str) -> list[str]:

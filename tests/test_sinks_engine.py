@@ -21,7 +21,7 @@ from mydumper_spark.plans.loader_dag import (
 from mydumper_spark.sinks.manifest import Manifest, read_manifest, verify_manifest, write_manifest
 from mydumper_spark.sinks.writers import (
     CsvFormat,
-    insert_statements,
+    insert_statements_stream,
     write_csv,
     write_load_data,
 )
@@ -52,15 +52,18 @@ def test_csv_file_rotation(customer, tmp_path):
 
 
 def test_insert_statements(spark, customer):
-    stmts = insert_statements(customer.limit(10), "customer", rows_per_statement=4)
-    rows = [r["statement"] for r in stmts.collect()]
-    assert all(r.startswith("INSERT INTO `customer`") and r.endswith(";") for r in rows)
-    assert sum(r.count("),(") + 1 for r in rows) == 10  # every row rendered
+    for table, quoted in (("customer", "`customer`"),
+                          ("cust`omer", "`cust``omer`")):  # ` doubles
+        stmts = insert_statements_stream(customer.limit(10), table, rows_per_statement=4)
+        rows = [r["statement"] for r in stmts.collect()]
+        assert all(r.startswith(f"INSERT INTO {quoted} VALUES ") and r.endswith(";")
+                   for r in rows)
+        assert sum(r.count("),(") + 1 for r in rows) == 10  # every row rendered
 
 
 def test_insert_statement_escaping(spark):
     df = spark.createDataFrame([(1, "O'Brien \\ co")], "id int, name string")
-    stmt = insert_statements(df, "t").first()["statement"]
+    stmt = insert_statements_stream(df, "t").first()["statement"]
     assert "O\\'Brien" in stmt and "\\\\ co" in stmt
 
 
@@ -320,9 +323,9 @@ def test_parse_tuples_unit():
 
 
 def test_insert_sql_roundtrip(spark, tmp_path):
-    """write_insert_sql → read_dump_table equals the source — the
+    """insert_statements_stream → read_insert_sql equals the source — the
     reference's own dump-then-load oracle (myloader_restore.c)."""
-    from mydumper_spark.sinks.writers import write_insert_sql
+    from mydumper_spark.sources.insert_parser import read_insert_sql
 
     df = spark.createDataFrame(
         [
@@ -333,8 +336,6 @@ def test_insert_sql_roundtrip(spark, tmp_path):
         ],
         "id bigint, name string, val double, payload binary",
     )
-    write_insert_sql(df, str(tmp_path / "t.sql"), "t", rows_per_statement=2)
-    back = read_dump_table(spark, str(tmp_path), "t", schema=df.schema)
 
     def norm(rows):
         return {
@@ -346,7 +347,11 @@ def test_insert_sql_roundtrip(spark, tmp_path):
             for r in rows
         }
 
-    assert norm(back.collect()) == norm(df.collect())
+    for i, table in enumerate(("t", "t`x")):
+        path = str(tmp_path / f"t{i}.sql")
+        insert_statements_stream(df, table, rows_per_statement=2).write.text(path)
+        back = read_insert_sql(spark, path, df.schema)
+        assert norm(back.collect()) == norm(df.collect()), table
 
 
 def test_reference_style_sql_chunks(spark, tmp_path):
@@ -1863,6 +1868,22 @@ def test_sql_format_dump_roundtrip_exact(spark, sf_dir, tmp_path):
     assert back.exceptAll(orig).count() == 0
 
 
+def test_sql_format_exec_runs_per_chunk(spark, sf_dir, tmp_path):
+    """--exec on a fmt="sql" dump runs the command once per chunk file
+    (reference mydumper_exec_command.c: per finished data file)."""
+    out = str(tmp_path / "sqlexec")
+    marker = tmp_path / "ran"
+    dump(spark, sf_dir, DumpConfig(
+        output_dir=out, fmt="sql", rows_per_statement=100,
+        max_records_per_file=300,
+        exec_per_file=f"sh -c 'echo \"$0\" >> {marker}' FILENAME",
+        filters=TableFilters(tables_list={"default.orders"})))
+    chunks = sorted(os.path.join(out, f) for f in os.listdir(out)
+                    if f.startswith("orders.") and f.endswith(".sql"))
+    assert len(chunks) >= 5
+    assert sorted(marker.read_text().splitlines()) == chunks
+
+
 def test_sql_format_statement_size_byte_cap(spark, tmp_path):
     """-s/--statement-size caps every emitted statement by BYTES exactly
     (at least one tuple per statement), losing no rows."""
@@ -1953,12 +1974,12 @@ def test_check_row_count_and_disk_limits(spark, sf_dir, tmp_path, monkeypatch):
         filters=TableFilters(tables_list={"default.region"})))
 
     # mismatch path: make the written read-back disagree with the pre-count
-    real = eng._read_written
+    real = eng.read_dumped_table
 
-    def tampered(spark_, path, cfg, schema):
-        return real(spark_, path, cfg, schema).limit(3)
+    def tampered(spark_, entry, csv_dialect=None):
+        return real(spark_, entry, csv_dialect=csv_dialect).limit(3)
 
-    monkeypatch.setattr(eng, "_read_written", tampered)
+    monkeypatch.setattr(eng, "read_dumped_table", tampered)
     with pytest.raises(RuntimeError, match="row count mismatch"):
         dump(spark, sf_dir, DumpConfig(
             output_dir=str(tmp_path / "crc2"), check_row_count=True,
