@@ -47,6 +47,17 @@ KNOWN_PRIMARY_KEYS: dict[str, list[str]] = {
 
 _INTEGRAL_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
+#: Spark's JDBC partition bounds are signed 64-bit longs
+_LONG_MIN, _LONG_MAX = -(1 << 63), (1 << 63) - 1
+
+
+def _is_integral(dt: T.DataType) -> bool:
+    """Integer types and scale-0 decimals — the type Spark gives MySQL
+    ``BIGINT UNSIGNED`` and DuckDB ``BIGINT`` read over JDBC, whose keys
+    chunk exactly like integers."""
+    return isinstance(dt, _INTEGRAL_TYPES) or (
+        isinstance(dt, T.DecimalType) and dt.scale == 0)
+
 
 @dataclass
 class TableMeta:
@@ -143,13 +154,13 @@ def pick_chunk_column(meta: TableMeta,
     by_name = {f.name: f for f in schema.fields}
     for c in meta.primary_key:
         f = by_name.get(c)
-        if f is not None and isinstance(f.dataType, _INTEGRAL_TYPES):
+        if f is not None and _is_integral(f.dataType):
             return c
     if profile:
         stats = {r["column_name"]: r for r in profile}
         best, best_card = None, 1
         for f in schema.fields:  # schema order breaks ties deterministically
-            if not isinstance(f.dataType, _INTEGRAL_TYPES):
+            if not _is_integral(f.dataType):
                 continue
             r = stats.get(f.name)
             if r is None or not r.get("n_distinct"):
@@ -162,7 +173,7 @@ def pick_chunk_column(meta: TableMeta,
         if best is not None:
             return best
     for f in schema.fields:
-        if isinstance(f.dataType, _INTEGRAL_TYPES) and re.search(r"(key|id)$", f.name, re.I):
+        if _is_integral(f.dataType) and re.search(r"(key|id)$", f.name, re.I):
             return f.name
     if meta.primary_key:
         return meta.primary_key[0]
@@ -347,16 +358,18 @@ class JdbcCatalog:
             col = pick_chunk_column(meta)
             f = ({f.name: f for f in meta.schema.fields}.get(col)
                  if meta.schema is not None and col else None)
-            if f is not None and isinstance(f.dataType, _INTEGRAL_TYPES):
+            if f is not None and _is_integral(f.dataType):
                 qc = self._qident(col)
                 bounds = self._q(
                     f"SELECT MIN({qc}) AS lo, MAX({qc}) AS hi FROM {table}"
                 ).first()
-                if bounds["lo"] is not None:
+                lo, hi = bounds["lo"], bounds["hi"]
+                # an unsigned/decimal key past the long range cannot be a
+                # bound: keep the unpartitioned scan
+                if lo is not None and _LONG_MIN <= int(lo) and int(hi) < _LONG_MAX:
                     return self.spark.read.jdbc(
                         url=self.url, table=table, column=col,
-                        lowerBound=int(bounds["lo"]),
-                        upperBound=int(bounds["hi"]) + 1,
+                        lowerBound=int(lo), upperBound=int(hi) + 1,
                         numPartitions=num_chunks, properties=self.properties,
                     )
         return self.spark.read.jdbc(

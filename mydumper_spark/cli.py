@@ -561,25 +561,21 @@ def cmd_prepare(args: argparse.Namespace) -> int:
     token-window chunking → parquet out.
     Stage order mirrors cost: cheap per-row gates run after dedup shrinks
     the corpus, the broadcast decontamination runs on survivors only, and
-    chunking (the only row-multiplying stage) runs last."""
-    from pyspark.sql import functions as F
-
-    from mydumper_spark.operators.contamination import (
-        decontaminate, repetition_metrics,
-    )
-    from mydumper_spark.operators.corpus import (
-        chunk_documents,
-        dedup_lines_global,
-        dedup_token_blocks_global,
-    )
-    from mydumper_spark.operators.dedup import exact_dedup, minhash_dedup
-    from mydumper_spark.operators.text import quality_score
-
+    chunking (the only row-multiplying stage) runs last.
+    The per-document gates (blocklist, Gopher, repetition, --min-quality)
+    filter the stage frame in place, one projection each
+    (:func:`_gate_in_place`); the gates that depend on the whole corpus or
+    a trained model (--min-novelty, --lm-gate-ppm, --ml-quality-gate)
+    semi-join their passing doc_ids back."""
     if args.pack_tokens and not args.chunk_tokens:
         build_parser().error(
             "--pack-tokens requires --chunk-tokens (sequences are packed "
             "from token-window chunks)"
         )
+    if args.lm_gate_ppm is not None and not (args.lm_ref or args.lm_ref_source):
+        build_parser().error(
+            "--lm-gate-ppm needs --lm-ref (parquet) or --lm-ref-source "
+            "(in-corpus slice) as the trusted corpus")
     spark = _session(args.threads)
     df = spark.read.parquet(args.source)
     counts = {"input": df.count()}
@@ -592,6 +588,31 @@ def cmd_prepare(args: argparse.Namespace) -> int:
 
     def _stage(d, key):
         return persist_and_count(d, counts, key, cached)
+
+    # unpersist on every exit: in-process callers (tests, the daemon)
+    # outlive a failed run and would otherwise keep the stage blocks
+    try:
+        _prepare_stages(spark, args, df, _stage)
+    finally:
+        for d in cached:
+            d.unpersist()
+    counts["output_rows"] = spark.read.parquet(args.outputdir).count()
+    print(json.dumps(counts))
+    return 0
+
+
+def _prepare_stages(spark, args, df, _stage) -> None:
+    """The staged body of `prepare`, from dedup to the parquet write;
+    ``_stage(frame, key)`` persists and counts a stage."""
+    from pyspark.sql import functions as F
+
+    from mydumper_spark.operators.contamination import decontaminate
+    from mydumper_spark.operators.corpus import (
+        chunk_documents,
+        dedup_lines_global,
+        dedup_token_blocks_global,
+    )
+    from mydumper_spark.operators.dedup import exact_dedup, minhash_dedup
 
     if args.dedup == "exact":
         df = exact_dedup(df)
@@ -680,21 +701,14 @@ def cmd_prepare(args: argparse.Namespace) -> int:
 
         if args.lm_ref:
             ref = spark.read.parquet(args.lm_ref)
-        elif args.lm_ref_source:
-            ref = df.where(F.col("source") == args.lm_ref_source)
         else:
-            raise SystemExit(
-                "--lm-gate-ppm needs --lm-ref (parquet) or "
-                "--lm-ref-source (in-corpus slice) as the trusted corpus")
+            ref = df.where(F.col("source") == args.lm_ref_source)
         lm = train_bigram_lm(ref)
         keep = ngram_lm_score(df, lm).where(
             F.col("lm_score_ppm") >= args.lm_gate_ppm).select("doc_id")
         df = df.join(keep, "doc_id", "left_semi")
     if args.min_quality is not None:
-        q = quality_score(df).where(
-            F.col("quality") >= args.min_quality
-        ).select("doc_id")
-        df = df.join(q, "doc_id", "left_semi")
+        df = _quality_floor(df, args.min_quality)
     if args.min_novelty is not None:
         from mydumper_spark.operators.text import ngram_novelty
 
@@ -764,16 +778,42 @@ def cmd_prepare(args: argparse.Namespace) -> int:
         out = shuffle_corpus(out, id_col=unit, seed=args.shuffle_seed,
                              n_shards=args.shuffle_shards)
     out.write.mode("overwrite").parquet(args.outputdir)
-    for d in cached:
-        d.unpersist()
-    counts["output_rows"] = spark.read.parquet(args.outputdir).count()
-    print(json.dumps(counts))
-    return 0
+
+
+def _gate_in_place(df, gate, passed):
+    """The rows of ``df`` that pass a per-document gate, judged in ONE
+    projection over the frame itself — no metrics branch over the stage,
+    no doc_id set semi-joined back. ``gate(frame, text_col=, id_col=,
+    keep_cols=)`` returns its metric frame carrying ``keep_cols`` through;
+    ``passed`` is the pass predicate on it. Each row is judged on its own
+    text. The columns are renamed positionally around the gate so a
+    payload column named like a metric (a corpus's own ``n_words``,
+    ``quality`` or ``blocked``) passes through unchanged."""
+    cols = df.columns
+    tmp = [f"__in{i}" for i in range(len(cols))]
+    text, doc_id = (tmp[cols.index(c)] for c in ("text", "doc_id"))
+    gated = gate(df.toDF(*tmp), text_col=text, id_col=doc_id,
+                 keep_cols=[t for t in tmp if t != doc_id])
+    return gated.where(passed).select(*tmp).toDF(*cols)
+
+
+def _quality_floor(df, floor: float):
+    """``prepare --min-quality``: keep the rows whose quality_score
+    composite is at least ``floor``, gated in place (quality_score carries
+    every input column already, so it needs no ``keep_cols``)."""
+    from pyspark.sql import functions as F
+
+    from mydumper_spark.operators.text import quality_score
+
+    return _gate_in_place(
+        df, lambda d, text_col, **_: quality_score(d, text_col),
+        F.col("quality") >= floor)
 
 
 def _apply_hygiene_gates(df, args):
     """The gopher/repetition/blocklist gate wiring shared by `prepare` and
-    `prepare-stream` — one place to fix a gate, both commands get it."""
+    `prepare-stream` — one place to fix a gate, both commands get it.
+    Every gate filters the frame in place (:func:`_gate_in_place`)."""
     from mydumper_spark.operators.contamination import repetition_metrics
     from mydumper_spark.operators.text import gopher_quality
 
@@ -782,19 +822,17 @@ def _apply_hygiene_gates(df, args):
 
         with open(args.blocklist) as f:
             entries = [ln.strip() for ln in f if ln.strip()]
-        keep = blocklist_filter(df, entries).where(
-            "blocked = 0").select("doc_id")
-        df = df.join(keep, "doc_id", "left_semi")
+        df = _gate_in_place(
+            df, lambda d, **kw: blocklist_filter(d, entries, **kw),
+            "blocked = 0")
     if getattr(args, "gopher_gate", False):
         sw = (args.gopher_stopwords.split(",")
               if args.gopher_stopwords else None)
-        keep = gopher_quality(df, stopwords=sw).where(
-            "gopher_pass = 1").select("doc_id")
-        df = df.join(keep, "doc_id", "left_semi")
+        df = _gate_in_place(
+            df, lambda d, **kw: gopher_quality(d, stopwords=sw, **kw),
+            "gopher_pass = 1")
     if getattr(args, "repetition_gate", False):
-        keep = repetition_metrics(df).where(
-            "passes_repetition").select("doc_id")
-        df = df.join(keep, "doc_id", "left_semi")
+        df = _gate_in_place(df, repetition_metrics, "passes_repetition")
     return df
 
 

@@ -102,7 +102,8 @@ def repetition_metrics(
 
     ``keep_cols``: extra input columns carried through unchanged (same
     contract as gopher_quality's) — lets a composite keep its payload in
-    the gate projection instead of semi-joining it back."""
+    the gate projection instead of semi-joining it back, which is how
+    ``prepare``'s ``--repetition-gate`` filters its stage frame."""
     keep = [F.col(k) for k in (keep_cols or [])]
     # two projections on purpose (the winnowing pattern): _dup_frac_ppm
     # reads its array twice (size + array_distinct) and Catalyst does NOT

@@ -656,6 +656,7 @@ def blocklist_filter(
     blocklist: list[str],
     text_col: str = "text",
     id_col: str = "doc_id",
+    keep_cols: list[str] | None = None,
 ) -> DataFrame:
     """The C4 blocklist gate (Raffel et al. 2020 §2.2 drop any page with a
     word from the "Dirty, Naughty, Obscene" list — the piece
@@ -675,7 +676,11 @@ def blocklist_filter(
     shingles. NOT a per-entry contains() chain — 2.4k unrolled contains
     would blow whole-stage codegen past the JIT method limit into
     interpreted fallback (the measured SQ8 lesson). Zero joins, zero
-    shuffles; grams build once per needed L (real lists use 2-3 lengths)."""
+    shuffles; grams build once per needed L (real lists use 2-3 lengths).
+
+    ``keep_cols``: extra input columns carried through unchanged (the
+    gopher_quality contract) — ``prepare`` gates the stage frame with
+    them in the same projection instead of semi-joining doc_ids back."""
     from mydumper_spark.operators.dedup import shingles, tokens
 
     words = sorted({w.lower() for w in blocklist if w and " " not in w})
@@ -701,6 +706,7 @@ def blocklist_filter(
     hits = hits.cast("int")
     return df.select(
         F.col(id_col),
+        *[F.col(k) for k in (keep_cols or [])],
         hits.alias("blocklist_hits"),
         (hits > 0).cast("int").alias("blocked"),
     )

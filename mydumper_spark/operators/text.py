@@ -850,7 +850,8 @@ def gopher_quality(
     ``keep_cols``: extra input columns carried through unchanged, so a
     composite can gate-and-keep-payload in ONE projection instead of a
     metrics pass plus a semi-join back to the payload (the metric values
-    are byte-identical either way).
+    are byte-identical either way) — ``prepare``'s ``--gopher-gate``
+    filters its stage frame this way.
     """
     keep = [F.col(k) for k in (keep_cols or [])]
     c0 = F.coalesce(F.col(text_col), F.lit(""))  # NULL text = empty doc

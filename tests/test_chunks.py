@@ -342,6 +342,25 @@ def test_pick_chunk_column_profile_beats_name_heuristic(spark, tmp_path):
     assert load_profiles(str(tmp_path / "nope")) == {}
 
 
+def test_pick_chunk_column_scale0_decimal_key():
+    """A DECIMAL(20,0) primary key — Spark's type for MySQL BIGINT UNSIGNED
+    and DuckDB BIGINT read over JDBC — is an integral chunk key; a
+    fractional DECIMAL(10,2) key never is (the integral row_id wins)."""
+    from pyspark.sql import types as T
+
+    from mydumper_spark.catalog import TableMeta, pick_chunk_column
+
+    def meta(pk_type):
+        return TableMeta(database="d", name="t", primary_key=["pk"],
+                         schema=T.StructType([
+                             T.StructField("pk", pk_type),
+                             T.StructField("row_id", T.IntegerType()),
+                         ]))
+
+    assert pick_chunk_column(meta(T.DecimalType(20, 0))) == "pk"
+    assert pick_chunk_column(meta(T.DecimalType(10, 2))) == "row_id"
+
+
 def test_range_predicates_unbounded_ends_and_backslash_quoting(spark):
     """Chunk plans are loss-proof by construction: the first/last chunks
     are UNBOUNDED (`< b1` / `>= b(n-1)`), so every row falls in exactly

@@ -502,6 +502,101 @@ def test_prepare_stage_counts_materialize_cache(spark):
             d.unpersist()
 
 
+def test_prepare_failure_unpersists_stage_cache(spark, tmp_path, monkeypatch):
+    """A prepare run that fails after persisting stages releases every
+    cached stage: in-process callers (the daemon, tests) outlive the run
+    and would otherwise keep the blocks."""
+    from mydumper_spark import cli
+    from mydumper_spark.operators import contamination
+
+    src = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(
+        [(i, f"the document number {i % 7}") for i in range(20)],
+        "doc_id long, text string").write.parquet(src)
+
+    def boom(*_a, **_kw):
+        raise RuntimeError("decontaminate failed")
+
+    monkeypatch.setattr(contamination, "decontaminate", boom)
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="decontaminate failed"):
+        cli.main(["prepare", "--source", src, "-o", str(tmp_path / "out"),
+                  "--dedup", "exact", "--decontaminate-eval", src])
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
+def _gate_corpus(spark):
+    """One document per gate that fails only that gate, plus a duplicated
+    doc_id whose second copy fails the Gopher gate. ``n_words`` is a
+    payload column named like a Gopher metric."""
+    words = [f"word{chr(97 + i % 26)}{i}" for i in range(60)]
+    good = " ".join(["the", "of", "and", *words]) + "."
+    rows = [
+        (1, good, "web", "en", 999),
+        (2, "the cat and the dog", "web", "en", 5),            # gopher
+        (3, "the of and spam " * 30, "wiki", "en", 120),        # repetition
+        (4, good + " badword", "web", "de", 64),                # blocklist
+        (5, "the of and " + ", ".join(words), "web", "fr", 63), # quality
+        (6, good.replace("word", "term"), "wiki", "en", 63),
+        (6, "the short one", "wiki", "en", 3),                  # gopher
+    ]
+    return spark.createDataFrame(
+        rows, "doc_id long, text string, source string, lang string, "
+        "n_words int")
+
+
+def test_prepare_gates_filter_in_place(spark, tmp_path):
+    """prepare's blocklist, Gopher, repetition and --min-quality gates
+    filter the stage frame in place: the same rows as the semi-join form
+    on unique doc_ids, the same columns in the same order (a payload
+    ``n_words`` untouched by the metric of that name), no join in the
+    plan, and each row judged on its own text — of a duplicated doc_id
+    only the passing copy survives."""
+    import argparse
+
+    from pyspark.sql import functions as F
+
+    from mydumper_spark import cli
+    from mydumper_spark.operators.contamination import repetition_metrics
+    from mydumper_spark.operators.corpus import blocklist_filter
+    from mydumper_spark.operators.text import gopher_quality, quality_score
+
+    bl = tmp_path / "blocklist.txt"
+    bl.write_text("badword\n")
+    args = argparse.Namespace(blocklist=str(bl), gopher_gate=True,
+                              gopher_stopwords=None, repetition_gate=True)
+
+    def in_place(df):
+        return cli._quality_floor(cli._apply_hygiene_gates(df, args), 0.8)
+
+    def semi_join(df):
+        for keep in (
+            lambda d: blocklist_filter(d, ["badword"]).where("blocked = 0"),
+            lambda d: gopher_quality(d).where("gopher_pass = 1"),
+            lambda d: repetition_metrics(d).where("passes_repetition"),
+            lambda d: quality_score(d).where(F.col("quality") >= 0.8),
+        ):
+            df = df.join(keep(df).select("doc_id"), "doc_id", "left_semi")
+        return df
+
+    corpus = _gate_corpus(spark)
+    gated = in_place(corpus)
+    assert gated.columns == corpus.columns
+    plan = gated._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan, plan
+    assert "Join" in semi_join(corpus)._jdf.queryExecution(
+    ).optimizedPlan().toString()
+
+    got = sorted(tuple(r) for r in gated.collect())
+    assert [(r[0], r[4]) for r in got] == [(1, 999), (6, 63)]
+    assert got[1][1].startswith("the of and terma0")
+
+    unique = corpus.where("doc_id != 6")
+    assert (sorted(tuple(r) for r in in_place(unique).collect())
+            == sorted(tuple(r) for r in semi_join(unique).collect())
+            == got[:1])
+
+
 def test_cli_prepare_c4_gopher_substring(tmp_path):
     """`prepare --c4 --gopher-gate --substring-dedup-tokens 8`: substring
     dedup rewrites text in place (doc set unchanged), C4 rewrites AND drops

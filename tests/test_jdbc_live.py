@@ -205,6 +205,40 @@ def test_dump_from_jdbc_chunked_live(spark, dump_db, customer, tmp_path):
     assert back.select("c_custkey").distinct().count() == customer.count()
 
 
+def test_jdbc_bigint_key_chunked_read_live(spark, tmp_path):
+    """DuckDB BIGINT keys arrive over JDBC as DECIMAL(20,0); they still
+    chunk: read(meta, 4) is a 4-partition scan (one server SELECT per
+    range) whose rows and distinct keys equal the table's. A scale-0
+    decimal key past the signed 64-bit range cannot bound Spark's
+    partitions and keeps the one-partition scan."""
+    import duckdb
+    from pyspark.sql import types as T
+
+    from mydumper_spark.catalog import JdbcCatalog
+
+    path = str(tmp_path / "bigint.duckdb")
+    con = duckdb.connect(path)
+    con.execute("CREATE TABLE big (id BIGINT PRIMARY KEY, v VARCHAR)")
+    con.execute("INSERT INTO big SELECT i * 7 + 3, 'v' || i FROM range(500) t(i)")
+    con.execute("CREATE TABLE huge (id DECIMAL(20,0) PRIMARY KEY, v VARCHAR)")
+    con.execute("INSERT INTO huge VALUES (1, 'a'), "
+                "(9223372036854775808, 'b'), (18446744073709551615, 'c')")
+    con.execute("CHECKPOINT")
+    con.close()
+    cat = JdbcCatalog(spark, f"jdbc:duckdb:{path}", properties=dict(DRIVER_PROPS))
+    metas = {m.name: m for m in cat.discover()}
+    key = metas["big"].schema["id"].dataType
+    assert isinstance(key, T.DecimalType) and key.scale == 0, key
+    df = cat.read(metas["big"], 4)
+    assert df.rdd.getNumPartitions() == 4
+    assert df.count() == 500
+    assert df.select("id").distinct().count() == 500
+
+    wide = cat.read(metas["huge"], 4)
+    assert wide.rdd.getNumPartitions() == 1
+    assert wide.count() == 3
+
+
 def test_dump_pathological_table_names_roundtrip(spark, tmp_path):
     """The specific_16 corpus: tables named ``a.b`` / ``t%`` / ``a/b`` dump
     through the FilenameRegistry's mydumper_<N> mapping
